@@ -17,7 +17,8 @@ function, left_semi/left_anti instead of the hand-rolled join+null-split,
 dense deterministic ``row_number`` surrogate keys (hazard H2), and
 ``unionByName`` (hazard H7).  The hand-rolled variant is preserved in
 ``queries_core`` as an oracle-checked query so parity with the
-reference's exact operator chain stays tested.
+reference's exact operator chain stays tested.  Step 7 is the caller's:
+it commits the returned batch with one ``VersionedTable.merge``.
 
 Scale notes:
 - The semi/anti joins broadcast the *existing-dimension key set* when it
@@ -65,13 +66,14 @@ class DimensionSpec:
 def build_scd1_dimension(
     silver: DataFrame, sink: DataFrame | None, spec: DimensionSpec
 ) -> DataFrame:
-    """Compute the post-merge state of one SCD-1 dimension.
+    """Compute one batch's SCD-1 MERGE source for a dimension.
 
     ``sink`` is the current gold dimension (None on initial load).
-    Returns the full new dimension: existing rows keep their surrogate
-    keys but take CURRENT attribute values from silver (SCD-1 update,
-    reference behavior per hazard H3); new natural keys get dense keys
-    starting at max(existing)+1.
+    Returns only the batch's rows: natural keys already in the sink
+    carry the sink's surrogate key with CURRENT attribute values from
+    silver (SCD-1 update, reference behavior per hazard H3); new natural
+    keys get dense keys starting at max(existing)+1.  Sink rows absent
+    from the batch are kept by the MERGE (step 7), not returned here.
     """
     nk = spec.nk_cols
     src = silver.select(*spec.natural_cols).distinct()  # P1
@@ -89,13 +91,13 @@ def build_scd1_dimension(
     # Incremental edge case, also reference parity: when a batch carries
     # a NEW attribute variant of a natural key that already exists in
     # the sink, the nk-join below hands both variants the sink's one
-    # surrogate, and the downstream merge aborts on the duplicate key —
+    # surrogate, and the downstream MERGE aborts on the duplicate key —
     # the same "multiple source rows matched" failure Delta's MERGE
     # raises in the reference.  Fail-fast is the contract; callers that
     # want collapse-to-one-variant semantics should pre-aggregate silver.
     order_cols = spec.natural_cols
 
-    if sink is None or not sink.take(1):  # S9 tableExists branch
+    if sink is None:  # S9 tableExists branch (an empty sink keys from 1 below, too)
         keyed = dense_surrogate_key(src, spec.key_col, order_cols, offset=0)
         return keyed.select(spec.key_col, *spec.natural_cols)
 
@@ -113,10 +115,4 @@ def build_scd1_dimension(
     new_keyed = dense_surrogate_key(new, spec.key_col, order_cols, offset).select(
         spec.key_col, *spec.natural_cols
     )
-
-    # Keep sink rows whose natural key vanished from this batch's source:
-    # MERGE never deletes (no whenNotMatchedBySource in the reference).
-    vanished = sink.join(src.select(*nk), on=nk, how="left_anti")
-    vanished = vanished.select(spec.key_col, *spec.natural_cols)
-
-    return existing.unionByName(new_keyed).unionByName(vanished)  # U1, H7
+    return existing.unionByName(new_keyed)  # U1, H7

@@ -57,7 +57,7 @@ def build_scd2_dimension(
     ts = F.lit(batch_ts)
     src = src.select(*spec.natural_cols).distinct()
 
-    if sink is None or not sink.take(1):
+    if sink is None:  # an empty sink opens every row from key 1 below, too
         opened = dense_surrogate_key(src, spec.key_col, spec.natural_cols, 0)
         return opened.select(
             spec.key_col,

@@ -4,7 +4,8 @@ The reference upserts gold tables with Delta MERGE
 (`3(1)_Gold_dim_model.py:163-169` ``whenMatchedUpdateAll /
 whenNotMatchedInsertAll``; `4_Gold_fact_sales_table.py:68-74`).
 delta-spark is not on this classpath, so we implement the same
-*semantics* relationally and commit with an atomic directory swap:
+*semantics* relationally (gold commits it with ``VersionedTable.merge``;
+only the flat streaming sink uses ``merge_write_parquet``'s two renames):
 
     merged = source ∪ (target ⟕anti source on merge keys)
 
@@ -30,6 +31,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import uuid
@@ -100,23 +102,38 @@ def merge_write_parquet(
     *,
     assert_unique: bool = True,
 ) -> None:
-    """MERGE INTO a parquet directory with an atomic-ish swap commit.
+    """MERGE INTO a flat parquet directory, committed by two renames.
 
     Reads current target (if any), computes the merged relation, writes
-    to a staging dir, then swaps.  The read must be fully materialized
-    before the target dir is replaced, hence the staging write.
+    to a staging dir, then renames the live dir aside and staging into
+    place.  The read must be fully materialized before the target dir is
+    replaced, hence the staging write.  A failure between the renames is
+    rolled back; after a crash there, the next call first renames the
+    newest aside copy back to ``path``.
     """
+    olds = glob.glob(glob.escape(path) + ".__old_*")
+    if olds and not os.path.isdir(path):
+        os.rename(max(olds, key=os.path.getctime), path)
     exists = os.path.isdir(path) and any(
         f.endswith(".parquet") for f in os.listdir(path)
     )
     target = spark.read.parquet(path) if exists else None
     merged = merge_upsert(target, source, keys, assert_unique=assert_unique)
     staging = f"{path}.__staging_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(staging)
+    try:
+        merged.write.mode("overwrite").parquet(staging)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
     if exists:
         old = f"{path}.__old_{uuid.uuid4().hex[:8]}"
         os.rename(path, old)
-        os.rename(staging, path)
+        try:
+            os.rename(staging, path)
+        except BaseException:
+            os.rename(old, path)
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
         shutil.rmtree(old, ignore_errors=True)
     else:
         os.makedirs(os.path.dirname(path) or ".", exist_ok=True)

@@ -25,7 +25,6 @@ from ..io import read_csv, read_parquet, write_parquet
 from ..operators.dimensions import DimensionSpec, build_scd1_dimension
 from ..operators.fact import aggregate_to_grain
 from ..operators.fact import build_fact as assemble_fact
-from ..operators.upsert import merge_write_parquet
 from ..operators.versioned import VersionedTable
 from ..schemas import RAW_SALES_SCHEMA
 
@@ -86,16 +85,15 @@ class SalesPipeline:
 
     - silver is hive-partitioned on ``Year`` so calendar-filtered scans
       prune whole directories (the first-order optimization at scale).
-    - gold tables are :class:`VersionedTable`s by default: every MERGE
-      is an atomic versioned commit (Delta-``_delta_log`` semantics —
-      readers see old or new, never partial; history queryable).
-      ``versioned=False`` falls back to the directory-swap writer.
+    - gold tables are :class:`VersionedTable`s: every batch commits one
+      SCD-1 MERGE per table as an atomic versioned commit
+      (Delta-``_delta_log`` semantics — readers see old or new, never
+      partial; history queryable).
     """
 
-    def __init__(self, spark: SparkSession, root: str, *, versioned: bool = True):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.versioned = versioned
         self.bronze = os.path.join(root, "bronze")
         self.silver = os.path.join(root, "silver", "carsales")
         self.gold = os.path.join(root, "gold")
@@ -110,18 +108,7 @@ class SalesPipeline:
         return VersionedTable(self.spark, self.gold_path(table))
 
     def read_gold(self, table: str, version: int | None = None) -> DataFrame | None:
-        if self.versioned:
-            return self.gold_table(table).read(version)
-        p = self.gold_path(table)
-        if os.path.isdir(p):
-            return self.spark.read.parquet(p)
-        return None
-
-    def _write_gold(self, df: DataFrame, table: str, keys: list[str]) -> None:
-        if self.versioned:
-            self.gold_table(table).merge(df, keys)
-        else:
-            merge_write_parquet(self.spark, df, self.gold_path(table), keys=keys)
+        return self.gold_table(table).read(version)
 
     # -- stages -----------------------------------------------------------
     def ingest_bronze(self, csv_path: str) -> DataFrame:
@@ -138,19 +125,22 @@ class SalesPipeline:
     def build_dimensions(self, silver: DataFrame) -> dict[str, DataFrame]:
         dims: dict[str, DataFrame] = {}
         for name, spec in DIM_SPECS.items():
-            sink = self.read_gold(name)
-            dim = build_scd1_dimension(silver, sink, spec)
-            self._write_gold(dim, name, keys=[spec.key_col])
-            dims[name] = self.read_gold(name)
+            table = self.gold_table(name)
+            batch = build_scd1_dimension(silver, table.read(), spec)
+            table.merge(batch, [spec.key_col])
+            dims[name] = table.read()
         return dims
 
     def build_fact(self, silver: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
         fact = assemble_fact(
             silver, {n: (df, DIM_SPECS[n]) for n, df in dims.items()}
         )
+        # aggregate_to_grain makes the merge keys unique, so the
+        # duplicate-key check would only re-run the whole fact plan
         fact = aggregate_to_grain(fact, FACT_GRAIN)
-        self._write_gold(fact, "factsales", keys=FACT_GRAIN)
-        return self.read_gold("factsales")
+        table = self.gold_table("factsales")
+        table.merge(fact, FACT_GRAIN, assert_unique=False)
+        return table.read()
 
     def run(self, csv_path: str) -> dict[str, DataFrame]:
         """One full load (initial or incremental — same code path)."""
@@ -158,11 +148,10 @@ class SalesPipeline:
         silver = self.build_silver()
         dims = self.build_dimensions(silver)
         fact = self.build_fact(silver, dims)
-        for t in [*dims, "factsales"]:  # S3: SQL-addressable gold
-            self.read_gold(t).createOrReplaceTempView(
-                self.catalog.view_name("gold", t)
-            )
-        return {**dims, "factsales": fact, "silver": silver}
+        gold = {**dims, "factsales": fact}
+        for t, df in gold.items():  # S3: SQL-addressable gold
+            df.createOrReplaceTempView(self.catalog.view_name("gold", t))
+        return {**gold, "silver": silver}
 
     # -- data-quality surface ---------------------------------------------
     def quality_report(self) -> dict[str, dict[str, int]]:

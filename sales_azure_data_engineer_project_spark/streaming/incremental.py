@@ -29,6 +29,31 @@ __all__ = [
 ]
 
 
+def _drain_merge(
+    spark, source_dir, schema, checkpoint_dir, merge, target_path, keys, *args, assert_unique
+) -> None:
+    """Drain every available file in ``source_dir`` once (checkpointed),
+    MERGEing each non-empty micro-batch into ``target_path`` with
+    ``merge(session, batch, target_path, keys, *args)``."""
+
+    def upsert_batch(batch_df: DataFrame, _epoch: int) -> None:
+        if batch_df.isEmpty():
+            return
+        # dedup within the micro-batch so MERGE keys are unique (H4)
+        deduped = batch_df.dropDuplicates(keys)
+        merge(batch_df.sparkSession, deduped, target_path, keys, *args,
+              assert_unique=assert_unique)
+
+    (
+        spark.readStream.schema(schema).parquet(source_dir)
+        .writeStream.foreachBatch(upsert_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def stream_incremental_merge(
     spark: SparkSession,
     source_dir: str,
@@ -46,24 +71,8 @@ def stream_incremental_merge(
     the streaming equivalent of one reference pipeline run; schedule it
     (or use a continuous trigger) for true streaming.
     """
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-
-    def upsert_batch(batch_df: DataFrame, _epoch: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # dedup within the micro-batch so MERGE keys are unique (H4)
-        deduped = batch_df.dropDuplicates(keys)
-        merge_write_parquet(
-            batch_df.sparkSession, deduped, target_path, keys, assert_unique=assert_unique
-        )
-
-    (
-        stream.writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain_merge(spark, source_dir, schema, checkpoint_dir, merge_write_parquet,
+                 target_path, keys, assert_unique=assert_unique)
 
 
 def stream_incremental_merge_partitioned(
@@ -87,28 +96,8 @@ def stream_incremental_merge_partitioned(
     tracking keeps exactly-once across restarts; the merge itself is
     idempotent on the keys, so a replayed batch converges to the same
     state."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-
-    def upsert_batch(batch_df: DataFrame, _epoch: int) -> None:
-        if batch_df.isEmpty():
-            return
-        deduped = batch_df.dropDuplicates(keys)
-        merge_write_partitioned(
-            batch_df.sparkSession,
-            deduped,
-            target_path,
-            keys,
-            partition_col,
-            assert_unique=assert_unique,
-        )
-
-    (
-        stream.writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain_merge(spark, source_dir, schema, checkpoint_dir, merge_write_partitioned,
+                 target_path, keys, partition_col, assert_unique=assert_unique)
 
 
 def windowed_event_counts(

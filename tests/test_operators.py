@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,7 +17,10 @@ from sales_azure_data_engineer_project_spark.operators.dimensions import (
     DimensionSpec,
     build_scd1_dimension,
 )
-from sales_azure_data_engineer_project_spark.operators.upsert import merge_upsert
+from sales_azure_data_engineer_project_spark.operators.upsert import (
+    merge_upsert,
+    merge_write_parquet,
+)
 
 
 def test_split_part(spark):
@@ -68,11 +73,73 @@ def test_scd1_dimension_initial_and_incremental(spark):
     got1 = {r["nk"]: (r["dim_x_key"], r["attr"]) for r in d1.collect()}
     assert got1 == {"a": (1, "A"), "b": (2, "B")}
 
-    # incremental: update a's attr, add c; b vanishes from batch but is kept
+    # incremental: update a's attr, add c; b vanishes from batch but the
+    # MERGE keeps it
     s2 = spark.createDataFrame([("a", "A2"), ("c", "C")], ["nk", "attr"])
-    d2 = build_scd1_dimension(s2, d1, spec)
+    d2 = merge_upsert(d1, build_scd1_dimension(s2, d1, spec), ["dim_x_key"])
     got2 = {r["nk"]: (r["dim_x_key"], r["attr"]) for r in d2.collect()}
     assert got2 == {"a": (1, "A2"), "b": (2, "B"), "c": (3, "C")}
+
+
+def test_merge_write_parquet_rolls_back_a_failed_swap(spark, tmp_path, monkeypatch):
+    path = str(tmp_path / "t")
+
+    def rows():
+        return {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
+
+    merge_write_parquet(spark, spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), path, ["k"])
+    batch = spark.createDataFrame([(2, "B"), (3, "c")], ["k", "v"])
+
+    # the staging -> path rename raises after the live dir was moved aside
+    real_rename = os.rename
+
+    def failing_rename(src, dst):
+        if ".__staging_" in src:
+            raise OSError("injected rename failure")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(OSError, match="injected"):
+        merge_write_parquet(spark, batch, path, ["k"])
+    monkeypatch.undo()
+    assert rows() == {1: "a", 2: "b"}
+    assert os.listdir(tmp_path) == ["t"]
+
+    # a staged write that raises leaves no staging dir behind
+    failing = batch.select("k", F.expr("CAST(raise_error('boom') AS STRING)").alias("v"))
+    with pytest.raises(Exception, match="boom"):
+        merge_write_parquet(spark, failing, path, ["k"])
+    assert os.listdir(tmp_path) == ["t"]
+
+    merge_write_parquet(spark, batch, path, ["k"])
+    assert rows() == {1: "a", 2: "B", 3: "c"}
+
+
+def test_merge_write_parquet_recovers_a_crash_between_renames(spark, tmp_path):
+    path = str(tmp_path / "t")
+    merge_write_parquet(spark, spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), path, ["k"])
+    os.rename(path, f"{path}.__old_x")  # the process died after the first rename
+
+    merge_write_parquet(spark, spark.createDataFrame([(2, "B"), (3, "c")], ["k", "v"]), path, ["k"])
+    assert {r["k"]: r["v"] for r in spark.read.parquet(path).collect()} == {
+        1: "a", 2: "B", 3: "c"
+    }
+    assert os.listdir(tmp_path) == ["t"]
+
+
+def test_dimension_builders_key_an_empty_sink_like_initial_load(spark):
+    from sales_azure_data_engineer_project_spark.operators.scd2 import build_scd2_dimension
+
+    spec = DimensionSpec("d", "key", "nk", ("attr",))
+    src = spark.createDataFrame([("b", "B"), ("a", "A"), ("c", None)], ["nk", "attr"])
+
+    initial = build_scd1_dimension(src, None, spec)
+    empty = build_scd1_dimension(src, initial.limit(0), spec)
+    assert sorted(empty.collect()) == sorted(initial.collect())
+
+    initial2 = build_scd2_dimension(src, None, spec, batch_ts="2024-01-01")
+    empty2 = build_scd2_dimension(src, initial2.limit(0), spec, batch_ts="2024-01-01")
+    assert sorted(map(tuple, empty2.collect())) == sorted(map(tuple, initial2.collect()))
 
 
 def test_scd1_dimension_keys_dense_unique(spark):

@@ -65,7 +65,7 @@ def test_scd1_two_batches_keys_stable_and_dense(spark, batch1, batch2):
     d1 = build_scd1_dimension(s1, None, spec)
     k1 = {r["nk"]: r["key"] for r in d1.collect()}
     s2 = spark.createDataFrame([(k,) for k in batch2], ["nk"])
-    d2 = build_scd1_dimension(s2, d1, spec)
+    d2 = merge_upsert(d1, build_scd1_dimension(s2, d1, spec), ["key"])
     k2 = {r["nk"]: r["key"] for r in d2.collect()}
 
     assert set(k2) == set(batch1) | set(batch2)

@@ -881,3 +881,24 @@ def test_corpus_sized_relations_are_not_broadcast(spark):
         ._jdf.queryExecution().optimizedPlan().toString()
     )
     assert "LeftSemi" in bm_plan, bm_plan
+
+
+def test_queries_registry_order_is_pinned():
+    """``queries()`` order is part of the driver contract; a module
+    split must keep the same 253 names in the same order.  The order is
+    read in a fresh interpreter, as the driver imports the entry module:
+    registration order follows which query module a process imports
+    first, and this test session has already imported some."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import hashlib, __spark_entry__ as e; names = list(e.queries()); "
+        "print(len(names), hashlib.sha256('\\n'.join(names).encode()).hexdigest())"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=root, capture_output=True, text=True, check=True
+    ).stdout.split()
+    assert out == ["253", "c6b422209de87893b8f49222818b6916285a4767c42af14c4ebe0017b279eda1"]

@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import pytest
+from conftest import INITIAL_ROWS, write_sales_csv
 from pyspark.sql import functions as F
 
 from sales_azure_data_engineer_project_spark.io import write_parquet
 from sales_azure_data_engineer_project_spark.operators.versioned import VersionedTable
+from sales_azure_data_engineer_project_spark.plans import SalesPipeline
 
 
 def test_versioned_merge_and_time_travel(spark, tmp_path):
@@ -581,3 +584,22 @@ def test_zorder_string_column_prunes(spark, tmp_path):
         for r in orders.filter(F.col("o_clerk").between(lo, hi)).collect()
     )
     assert got == expect and got
+
+
+def test_pipeline_aborts_on_two_variants_of_an_existing_key(spark, tmp_path):
+    """Delta parity (H4): a batch carrying two DealerNames for one
+    existing Dealer_ID fails the dim_dealer MERGE the way Delta's
+    "multiple source rows matched" does, and neither dim_dealer nor
+    factsales commits a new version."""
+    pipe = SalesPipeline(spark, str(tmp_path / "zones"))
+    pipe.run(write_sales_csv(str(tmp_path / "init.csv"), INITIAL_ROWS))
+    tables = ("dim_dealer", "factsales")
+    before = {t: pipe.gold_table(t).current_version() for t in tables}
+
+    variants = [
+        "BR0001,DLR0001,BMW-M1,1000,1,DT00001,1,1,2017,Chandler BMW,Chandler Motors,M1",
+        "BR0001,DLR0001,BMW-M1,2000,1,DT00001,1,1,2017,Chandler BMW,Chandler Motors II,M1",
+    ]
+    with pytest.raises(ValueError, match="multiple source rows"):
+        pipe.run(write_sales_csv(str(tmp_path / "variants.csv"), variants))
+    assert {t: pipe.gold_table(t).current_version() for t in tables} == before
